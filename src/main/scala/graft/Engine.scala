@@ -91,6 +91,8 @@ final class Engine(val spark: SparkSession, sfDir: String,
   dataDir.foreach { d =>
     sources.MetaCatalog.read(spark, d).foreach(_.foreach(restoreRecord))
     sources.MeasurementStore.list(spark, d).foreach { m =>
+      // heal a rewrite that died between a bucket's two renames
+      sources.MeasurementStore.heal(spark, d, m)
       sources.MeasurementStore.read(spark, d, m).foreach { case (df, meta) =>
         tables(m) = (df, meta)
       }
@@ -269,29 +271,38 @@ final class Engine(val spark: SparkSession, sfDir: String,
 
   /** Retention maintenance pass (SURVEY §1.3; reference RP durations at
     * syncing/models.go:3-9): drop rows older than each measurement's RP
-    * cutoff. Durable TIME-BUCKETED measurements expire as a partition
-    * drop — O(expired buckets), never O(table), the property that holds at
-    * 100 TB (VERDICT r6 item 1); legacy unbucketed directories fall back to
-    * the tmp-dir-swap rewrite; in-memory ones re-register the survivor
-    * plan. Expired rows are already invisible to reads via `load` — this
-    * reclaims the storage. */
+    * cutoff. Durably, each bucket whose whole span ends at or before the
+    * cutoff is replaced by nothing (parked under `<m>/expired.old`) —
+    * O(expired buckets), never O(table) (VERDICT r6 item 1). The boundary
+    * bucket keeps its rows at rest; `load` masks them. A legacy unbucketed
+    * directory is the one unit (bucket 0), replaced by its surviving rows.
+    * In-memory measurements re-register the survivors. */
   def enforceRetention(): Unit =
     tables.keys.toSeq.foreach { m =>
       retentionCutoffUs(m).foreach { cut =>
         val (df, meta) = tables(m)
         durableDirFor(m) match {
-          case Some(dir)
-              if sources.MeasurementStore.loadMeta(spark, dir, m).exists(_.bucketUs.isDefined) =>
-            if (sources.MeasurementStore.expireBuckets(spark, dir, m, cut).nonEmpty)
-              sources.MeasurementStore.read(spark, dir, m).foreach(t => tables(m) = t)
           case Some(dir) =>
-            val kept = df.where(col(meta.timeCol) >= cut)
-            sources.MeasurementStore.rewrite(spark, dir, meta, kept, keyTagsFor(m))
-            sources.MeasurementStore.read(spark, dir, m).foreach(t => tables(m) = t)
+            val (rows, buckets) = sources.MeasurementStore.loadMeta(spark, dir, m)
+              .flatMap(_.bucketUs) match {
+              case Some(b) => (spark.emptyDataFrame, sources.MeasurementStore
+                .liveBuckets(spark, dir, m).filter(tb => (tb + 1L) * b <= cut))
+              case None => (df.where(col(meta.timeCol) >= cut), Seq(0L))
+            }
+            if (buckets.nonEmpty) replaceDurable(dir, meta, rows, buckets, "expired")
           case None => tables(m) = (df.where(col(meta.timeCol) >= cut), meta)
         }
       }
     }
+
+  /** `MeasurementStore.replaceBuckets`, then re-register the fresh scan. */
+  private def replaceDurable(dir: String, meta: TableMeta, rows: DataFrame,
+      buckets: Seq[Long], ns: String): Unit = {
+    val m = meta.measurement
+    sources.MeasurementStore.replaceBuckets(spark, dir, bucketed(meta), rows, buckets, ns,
+      keyTagsFor(m))
+    sources.MeasurementStore.read(spark, dir, m).foreach(t => tables(m) = t)
+  }
 
   /** dataDir when this measurement is actually persisted there. */
   private def durableDirFor(m: String): Option[String] =
@@ -302,40 +313,25 @@ final class Engine(val spark: SparkSession, sfDir: String,
     * sustained ingest grows the file count (and with it per-scan footer and
     * listing work) without bound; the reference gets compaction for free
     * from the InfluxDB storage engine on its data nodes. This is the
-    * maintenance pass: when a durable measurement exceeds `ifMoreThan`
-    * files, rewrite it as ~512 MB target files via the tmp-dir swap and
-    * mark the schema uniform so subsequent scans skip mergeSchema footer
-    * reads. Purely physical — row content is untouched (retention expiry
-    * is `enforceRetention`'s job). Run it from the same scheduled
-    * maintenance that calls enforceRetention, NOT per write: a rewrite is
-    * O(table), so triggering it from the hot ingest path would turn O(batch)
-    * appends into quadratic write amplification. */
+    * maintenance pass: `MeasurementStore.compact` replaces each hot bucket
+    * by its own rows as ~512 MB files, never re-copying cold or
+    * already-compact buckets, and marks the schema uniform again when
+    * provable. Purely physical. Run it from scheduled maintenance, NOT per
+    * write: triggered from the ingest path, its O(bucket) rewrites would
+    * turn O(batch) appends into quadratic write amplification. */
   def compact(measurement: String, ifMoreThan: Int = 32): Unit =
     durableDirFor(measurement).foreach { dir =>
-      if (sources.MeasurementStore.bucketedLayout(spark, dir, measurement)) {
-        // bucketed layout: compact per shard-group directory — O(hot
-        // buckets), never O(table); sustained ingest churns only the
-        // current bucket, cold history is never re-copied
-        val done = sources.MeasurementStore.compactBuckets(
-          spark, dir, measurement, ifMoreThan)
-        if (done.nonEmpty)
-          sources.MeasurementStore.read(spark, dir, measurement)
-            .foreach(t => tables(measurement) = t)
-      } else {
-        val (files, bytes) = sources.MeasurementStore.dataFileStats(spark, dir, measurement)
-        if (files > ifMoreThan) {
-          val (df, meta) = tables(measurement)
-          val targetFiles = math.max(1L, bytes / (512L << 20)).toInt // ~512 MB each
-          sources.MeasurementStore.rewrite(spark, dir, meta,
-            df.coalesce(targetFiles), keyTagsFor(measurement))
-          sources.MeasurementStore.read(spark, dir, measurement)
-            .foreach(t => tables(measurement) = t)
-        }
-      }
+      val wasUniform = sources.MeasurementStore.isUniform(spark, dir, measurement)
+      if (sources.MeasurementStore.compact(spark, dir, measurement, ifMoreThan).nonEmpty ||
+          sources.MeasurementStore.isUniform(spark, dir, measurement) != wasUniform)
+        sources.MeasurementStore.read(spark, dir, measurement)
+          .foreach(t => tables(measurement) = t)
     }
 
-  /** The scheduled maintenance pass: reclaim expired rows, then merge
-    * small files. The at-scale deployment runs this per measurement on a
+  /** The scheduled maintenance pass: drop expired buckets, then compact
+    * hot ones — both O(touched buckets) through the store's one bucket
+    * swap, so a store with nothing expired and one file per leaf
+    * directory is not rewritten. The at-scale deployment runs this on a
     * timer (the analog of the reference data nodes' compaction daemon).
     *
     * Cadence guidance (same thresholds across the engine's at-rest
@@ -590,10 +586,10 @@ final class Engine(val spark: SparkSession, sfDir: String,
       dataDir match {
         case Some(dir) =>
           // durable INTO: the reference's SELECT INTO lands points in the
-          // target's shards, so they survive a restart; rewrite carries
-          // this path's full-recompute semantics to disk
-          sources.MeasurementStore.rewrite(spark, dir, bucketed(tMeta), out, keyTagsFor(target))
-          sources.MeasurementStore.read(spark, dir, target).foreach(t => tables(target) = t)
+          // target's shards, so they survive a restart. Full recompute:
+          // every live bucket of the target is replaced
+          replaceDurable(dir, tMeta, out,
+            sources.MeasurementStore.liveBuckets(spark, dir, target), "rewrite")
         case None => registerMeasurement(tMeta, out)
       }
       // the qualified target binds the measurement to that db.rp —
@@ -635,24 +631,31 @@ final class Engine(val spark: SparkSession, sfDir: String,
         // true unbounded stream swaps this for ContinuousQuery.start on a
         // readStream of the same source — identical plan, streaming sink.
         cqs(n) = (Translator.measurementName(sel.from), sel, everyUs, forUs)
-        runSelect(sel)
+        // InfluxDB 1.x stores a CQ without checking its source: a source
+        // with no data yet backfills nothing; its first write patches
+        sel.from match {
+          case FromMeasurement(m) if !measurementNames.contains(m) =>
+          case _ => runSelect(sel)
+        }
       case DropContinuousQuery(n, db) =>
         databases.dropCq(db, n)
         cqs.remove(n); cqDirty.remove(n); cqLastRun.remove(n)
       case DeleteSeries(from, where) =>
-        // delete = retain the complement; durable measurements compact at
-        // rest (tmp-dir swap — the partition-overwrite analog), so the
-        // delete survives an engine restart
+        // delete = retain the complement; durably, only the buckets holding
+        // a deleted row are rewritten, so the delete survives a restart
         val (df, meta) = load(from)
-        val remaining = where match {
-          case Some(w) => df.where(!new Translator(df, meta).wherePredicate(w))
-          case None    => df.limit(0)
+        def remaining(rows: DataFrame) = where match {
+          case Some(w) => rows.where(!new Translator(rows, meta).wherePredicate(w))
+          case None    => rows.limit(0)
         }
         durableDirFor(from) match {
           case Some(dir) =>
-            sources.MeasurementStore.rewrite(spark, dir, bucketed(meta), remaining, keyTagsFor(from))
-            sources.MeasurementStore.read(spark, dir, from).foreach(t => tables(from) = t)
-          case None => registerMeasurement(meta, remaining)
+            val hit = where.fold(df)(w => df.where(new Translator(df, meta).wherePredicate(w)))
+            val buckets = sources.MeasurementStore.bucketIdsOf(hit)
+            if (buckets.nonEmpty)
+              replaceDurable(dir, meta,
+                remaining(sources.MeasurementStore.inBuckets(df, buckets)), buckets, "rewrite")
+          case None => registerMeasurement(meta, remaining(df))
         }
       case DropMeasurement(n) =>
         tables.remove(n)
@@ -1177,7 +1180,7 @@ final class Engine(val spark: SparkSession, sfDir: String,
     * previously lived only in the in-memory union and silently vanished on
     * the next writeLineProtocol re-registration or a restart), (b) re-run
     * the stored SELECT restricted to the touched buckets, (c) patch those
-    * buckets in the INTO target — durably via MeasurementStore.rewrite when
+    * buckets in the INTO target — durably via the store's bucket swap when
     * dataDir is set, so standing-CQ results survive restart like raw writes
     * do. Per-batch cost stays O(batch + touched-bucket history). */
   private def processCqBatch(name: String, src: String, sel: SelectStmt,
@@ -1218,8 +1221,10 @@ final class Engine(val spark: SparkSession, sfDir: String,
   }
 
   /** Recompute a CQ's SELECT over just the buckets touched by the µs span
-    * [tLoUs, tHiUs] and patch those buckets into the INTO target —
-    * durably via MeasurementStore.rewrite when dataDir is set. Shared by
+    * [tLoUs, tHiUs] and patch those buckets into the INTO target. Durably
+    * only the target's `_tb` buckets the span overlaps are replaced; the
+    * rest stay byte-untouched (Structured Streaming's "update" output
+    * mode: a trigger touches only the result keys that changed). Shared by
     * the standing streaming path (processCqBatch) and the
     * writeLineProtocol batch continuation, so both stay
     * O(batch + touched-bucket history) per ingest, never O(full history). */
@@ -1236,24 +1241,27 @@ final class Engine(val spark: SparkSession, sfDir: String,
     val (df, m) = Translator.resolve(sel.from, load, () => measurementNames)
     val patch = new Translator(df, m).run(restricted).localCheckpoint(true)
     sel.into.foreach { target =>
-      // a durable target read back from a bucketed directory carries the
-      // physical `_tb` column — strip it before the column-compat check or
-      // the union would silently replace history instead of patching it
-      val next = tables.get(target).map(_._1.drop("_tb")) match {
-        case Some(prev) if prev.columns.sorted.sameElements(patch.columns.sorted) =>
-          prev.where(col("time") < lo || col("time") >= hi).unionByName(patch)
-        case _ => patch
-      }
       val tags = sel.groupByTags.filter(patch.columns.contains)
       val fields = patch.columns.toSeq
         .filterNot(c => c == "time" || tags.contains(c)).map(FieldMeta(_, None))
       val tMeta = TableMeta(target, "time", tags = tags, fields = fields)
+      // a durable target read back from a bucketed directory carries the
+      // physical `_tb` column — strip it before the column-compat check or
+      // the union would silently replace history instead of patching it.
+      // An absent or reshaped target is replaced by the patch as a whole
+      val prev = tables.get(target).map(_._1)
+        .filter(_.drop("_tb").columns.sorted.sameElements(patch.columns.sorted))
+      def patched(p: DataFrame) =
+        p.drop("_tb").where(col("time") < lo || col("time") >= hi).unionByName(patch)
       dataDir match {
         case Some(dir) =>
-          sources.MeasurementStore.rewrite(spark, dir, bucketed(tMeta), next, keyTagsFor(target))
-          sources.MeasurementStore.read(spark, dir, target).foreach(t => tables(target) = t)
-        case None =>
-          registerMeasurement(tMeta, compactLineage(target, next))
+          val live = sources.MeasurementStore.liveBuckets(spark, dir, target)
+          val buckets = if (prev.isEmpty) live else sources.MeasurementStore
+            .bucketIdsCovering(spark, dir, bucketed(tMeta), lo, hi).filter(live.contains)
+          replaceDurable(dir, tMeta,
+            prev.fold(patch)(p => patched(sources.MeasurementStore.inBuckets(p, buckets))),
+            buckets, "rewrite")
+        case None => registerMeasurement(tMeta, compactLineage(target, prev.fold(patch)(patched)))
       }
     }
   }

@@ -36,6 +36,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    401, no WRITE grant → 403 (write_handler.go:80-101); a body that
   *    parses to zero points → 400 `unable to parse points`
   *    (write_handler.go:74-78); success → 204.
+  *  - a request body above `MaxBodyBytes` (InfluxDB 1.x's default
+  *    `[http] max-body-size`), or a gzip write body above it once
+  *    decompressed, → 413 `Request Entity Too Large`.
   *  - `/ping`: 204, or `verbose` → 200 `{"version":…}` (ping.go:24-38).
   *
   * The non-chunked /query response buffers like the reference proxy does
@@ -79,6 +82,7 @@ final class HttpApi(engine: Engine, port: Int = 0) {
   private def safely(ex: HttpExchange)(h: HttpExchange => Unit): Unit =
     try h(ex)
     catch {
+      case _: BodyTooLarge => jsonError(ex, 413, "Request Entity Too Large")
       case e: Exception =>
         try jsonError(ex, 500, Option(e.getMessage).getOrElse(e.getClass.getName))
         catch { case _: Exception => () } // headers already sent mid-stream
@@ -96,10 +100,15 @@ final class HttpApi(engine: Engine, port: Int = 0) {
       }
     }.toMap
 
-  private def bodyBytes(ex: HttpExchange): Array[Byte] = {
-    val in = ex.getRequestBody
-    try in.readAllBytes() finally in.close()
-  }
+  private final class BodyTooLarge extends RuntimeException
+
+  /** The whole stream; BodyTooLarge (after one byte) past `MaxBodyBytes`. */
+  private def readBounded(in: java.io.InputStream): Array[Byte] =
+    try {
+      val bytes = in.readNBytes(HttpApi.MaxBodyBytes + 1)
+      if (bytes.length > HttpApi.MaxBodyBytes) throw new BodyTooLarge
+      bytes
+    } finally in.close()
 
   /** URL params, merged with a form-encoded POST body's (the public API
     * accepts `q` either way; body wins on conflict). */
@@ -164,7 +173,7 @@ final class HttpApi(engine: Engine, port: Int = 0) {
   // ---- /query ---------------------------------------------------------
 
   private def handleQuery(ex: HttpExchange): Unit = {
-    val p = params(ex, bodyBytes(ex))
+    val p = params(ex, readBounded(ex.getRequestBody))
     val db = p.getOrElse("db", "default") match { case "" => "default"; case d => d }
     p.get("q").filter(_.nonEmpty) match {
       case None => jsonError(ex, 400, "missing required parameter \"q\"")
@@ -232,7 +241,7 @@ final class HttpApi(engine: Engine, port: Int = 0) {
   // ---- /write ---------------------------------------------------------
 
   private def handleWrite(ex: HttpExchange): Unit = {
-    val raw = bodyBytes(ex)
+    val raw = readBounded(ex.getRequestBody)
     val p = params(ex, raw)
     p.get("db").filter(_.nonEmpty) match {
       case None => jsonError(ex, 400, "missing parameter: db")
@@ -257,8 +266,9 @@ final class HttpApi(engine: Engine, port: Int = 0) {
           engine.databases.listRps(db).find(_.default).map(_.name).getOrElse("autogen"))
         val text =
           if (Option(ex.getRequestHeaders.getFirst("Content-Encoding")).contains("gzip"))
-            try LineProtocol.gunzip(raw)
-            catch { case _: Exception =>
+            try new String(readBounded(new java.util.zip.GZIPInputStream(
+              new java.io.ByteArrayInputStream(raw))), UTF_8)
+            catch { case _: java.io.IOException =>
               jsonError(ex, 400, "unable to parse points"); return }
           else new String(raw, UTF_8)
         val lines = LineProtocol.splitLines(text)
@@ -296,4 +306,9 @@ final class HttpApi(engine: Engine, port: Int = 0) {
         else respond(ex, 204, "")
     }
   }
+}
+
+object HttpApi {
+  /** InfluxDB 1.x's default `[http] max-body-size`, in bytes. */
+  val MaxBodyBytes = 25000000
 }

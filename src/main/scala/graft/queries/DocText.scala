@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.PartitionSwap
 import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -377,8 +378,7 @@ object DocText {
           // compacting to one file per bucket — compaction is the
           // append path's documented concern, not the takedown's.
           (if (delSmall) survivors else survivors.repartition(col("_db")))
-            .write.mode("overwrite").partitionBy("_db")
-            .parquet(s"$idxDir/del.tmp/$t")
+            .write.mode("overwrite").partitionBy("_db").parquet(s"$idxDir/del.tmp/$t")
         }
       }: _*)
       // 2) per-bucket swaps, table by table. del.tmp now stays present
@@ -387,21 +387,14 @@ object DocText {
       //    mixed state) now refuses loudly instead; reconcile semantics
       //    are unchanged (per-bucket: tmp without live → finish, tmp
       //    with live → the swap never started for that bucket).
+      // A bucket whose every doc was deleted has no tmp dir: its swap
+      // only parks the live bucket.
       tables.foreach { t =>
-        val dir = s"$idxDir/$t"
-        val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-        val tmpRoot = s"$idxDir/del.tmp/$t"
-        buckets.foreach { b =>
-          val live = new org.apache.hadoop.fs.Path(s"$dir/_db=$b")
-          val tmp = new org.apache.hadoop.fs.Path(s"$tmpRoot/_db=$b")
-          val oldP = new org.apache.hadoop.fs.Path(s"$idxDir/del.old/$t/_db=$b")
-          if (f.exists(oldP)) f.delete(oldP, true)
-          f.mkdirs(oldP.getParent)
-          if (f.exists(live)) f.rename(live, oldP)
-          // a bucket whose every doc was deleted has no tmp dir: the
-          // rename above already emptied it out of the live layout
-          if (f.exists(tmp)) f.rename(tmp, live)
-        }
+        val dir = new org.apache.hadoop.fs.Path(s"$idxDir/$t")
+        PartitionSwap.commit(dir.getFileSystem(conf), buckets.map(b => s"_db=$b"),
+          new org.apache.hadoop.fs.Path(s"$idxDir/del.tmp/$t"),
+          new org.apache.hadoop.fs.Path(s"$idxDir/del.old/$t"))(
+          new org.apache.hadoop.fs.Path(dir, _))
       }
       new org.apache.hadoop.fs.Path(idxDir).getFileSystem(conf)
         .delete(new org.apache.hadoop.fs.Path(s"$idxDir/del.tmp"), true)
@@ -411,31 +404,23 @@ object DocText {
 
   /** Crash-recovery for the takedown's per-bucket tmp+rename swaps — the
     * document-index twin of `EmbedOps.reconcileSwaps` (ADVICE r11
-    * medium): a crash between rename(live→del.old) and rename(tmp→live)
-    * leaves a bucket's survivors parked under `del.tmp` and nothing live,
-    * which a later `neardupCheck` would read as "no prior docs in this
-    * bucket" and wrongly admit near-dups. On-disk state disambiguates:
-    * tmp bucket with no live bucket → finish the swap; tmp bucket with a
-    * live bucket → the swap never started, discard tmp and let the
-    * takedown re-run. Runs at entry of every index op (single-maintainer
-    * contract); two exists() probes when there is nothing to heal. */
+    * medium): a crash between a bucket's two renames (live → del.old,
+    * tmp → live) leaves its survivors parked under `del.tmp` and nothing
+    * live, which a later `neardupCheck` would read as "no prior docs in
+    * this bucket" and wrongly admit near-dups. `PartitionSwap.heal`
+    * applies the one crash rule: tmp bucket with no live bucket → finish
+    * the swap; tmp bucket with a live bucket → the swap never started,
+    * discard tmp and let the takedown re-run. Runs at entry of every
+    * index op (single-maintainer contract); two exists() probes when there
+    * is nothing to heal. */
   def neardupReconcile(s: SparkSession, idxDir: String): Unit = {
     val conf = s.sparkContext.hadoopConfiguration
+    val f = new org.apache.hadoop.fs.Path(idxDir).getFileSystem(conf)
     Seq("bands.parquet", "shingles.parquet").foreach { t =>
-      val tmpRoot = new org.apache.hadoop.fs.Path(s"$idxDir/del.tmp/$t")
-      val f = tmpRoot.getFileSystem(conf)
-      if (f.exists(tmpRoot)) {
-        f.listStatus(tmpRoot)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("_db="))
-          .foreach { st =>
-            val live = new org.apache.hadoop.fs.Path(
-              s"$idxDir/$t/${st.getPath.getName}")
-            if (!f.exists(live)) f.rename(st.getPath, live)
-          }
+      PartitionSwap.heal(f, new org.apache.hadoop.fs.Path(s"$idxDir/del.tmp/$t")) {
+        case u if u.startsWith("_db=") => new org.apache.hadoop.fs.Path(s"$idxDir/$t/$u")
       }
     }
-    val f = new org.apache.hadoop.fs.Path(idxDir)
-      .getFileSystem(conf)
     f.delete(new org.apache.hadoop.fs.Path(s"$idxDir/del.tmp"), true)
   }
 

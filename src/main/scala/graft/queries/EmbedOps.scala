@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.PartitionSwap
 import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -593,19 +594,11 @@ object EmbedOps {
   private[queries] def parquetFooterRows(s: SparkSession,
       dir: org.apache.hadoop.fs.Path): Long = {
     val conf = s.sparkContext.hadoopConfiguration
-    val f = dir.getFileSystem(conf)
-    if (!f.exists(dir)) return 0L
-    var n = 0L
-    val it = f.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try n += r.getRecordCount finally r.close()
-      }
-    }
-    n
+    PartitionSwap.parquetFiles(dir.getFileSystem(conf), dir).map { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   /** Move every part file under `tmpRoot/list_id=N/` into the live
@@ -1192,25 +1185,13 @@ object EmbedOps {
 
   /** Crash-recovery for every tmp+rename swap the index's maintenance ops
     * perform (`ivfDelete` → `del.tmp`, `ivfCompact` → `compact.tmp`,
-    * `pqDelete` → `codes.parquet.tmp`). The two-rename swap
-    * (live→old, tmp→live) is not atomic: a crash between the renames
-    * leaves a list's surviving rows parked under tmp and NOTHING live, so
-    * a later scan — including the IndexStream replay scrub, whose
-    * no-duplicate-no-loss guarantee depends on reading the true live
-    * layout (ADVICE r11 medium) — would silently see zero rows for that
-    * list. The on-disk state alone disambiguates the crash point:
-    *   - tmp dir present, live dir MISSING → crash mid-swap: finish it
-    *     (rename tmp→live — tmp holds the interrupted op's output rows);
-    *   - tmp dir present, live dir present → the swap never started for
-    *     this list: roll back by discarding tmp (the op that wrote it
-    *     re-runs from the intact live layout).
-    * Parked `*.old` generations are never touched. Called at entry of
-    * every maintenance op AND both per-batch appends, so one healing pass
-    * runs before the next read of the live layout, wherever the previous
-    * process died. Assumes the index's single-maintainer contract
-    * (IndexStream Scaladoc) — under it, any tmp present at op entry is by
-    * definition a dead run's leftover. Driver-side FS metadata ops only:
-    * three exists() probes when there is nothing to heal. */
+    * `pqDelete` → `codes.parquet.tmp`), by `PartitionSwap`'s rule: a tmp
+    * unit with no live unit finishes its swap, one beside its live unit
+    * is discarded. Unhealed, a list parked mid-swap would read as zero
+    * rows — the IndexStream replay scrub included (ADVICE r11 medium).
+    * Called at entry of every maintenance op and both per-batch appends
+    * (single-maintainer contract, IndexStream Scaladoc); three exists()
+    * probes when there is nothing to heal. */
   def reconcileSwaps(s: SparkSession, indexDir: String): Unit = {
     val conf = s.sparkContext.hadoopConfiguration
     Seq(("del.tmp", "assign.parquet", "list_id="),
@@ -1221,17 +1202,8 @@ object EmbedOps {
         ("emb.compact.tmp", "emb.parquet", "vbucket=")).foreach {
       case (ns, table, prefix) =>
       val tmpRoot = new org.apache.hadoop.fs.Path(s"$indexDir/$ns")
-      val f = tmpRoot.getFileSystem(conf)
-      if (f.exists(tmpRoot)) {
-        f.listStatus(tmpRoot)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-          .foreach { st =>
-            val live = new org.apache.hadoop.fs.Path(
-              s"$indexDir/$table/${st.getPath.getName}")
-            if (!f.exists(live) && !f.rename(st.getPath, live))
-              sys.error(s"swap heal failed: ${st.getPath} -> $live")
-          }
-        f.delete(tmpRoot, true)
+      PartitionSwap.heal(tmpRoot.getFileSystem(conf), tmpRoot) {
+        case u if u.startsWith(prefix) => new org.apache.hadoop.fs.Path(s"$indexDir/$table/$u")
       }
     }
     // two-tier takedown window (CRASH_MATRIX row 17): emb.dirty present
@@ -1263,14 +1235,8 @@ object EmbedOps {
     // discard tmp
     val f = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
     Seq("codes.parquet", "sq8.parquet", "bq.parquet").foreach { t =>
-      val live = new org.apache.hadoop.fs.Path(s"$indexDir/$t")
-      val ltmp = new org.apache.hadoop.fs.Path(s"$indexDir/$t.tmp")
-      if (f.exists(ltmp)) {
-        if (!f.exists(live)) {
-          if (!f.rename(ltmp, live))
-            sys.error(s"swap heal failed: $ltmp -> $live")
-        } else f.delete(ltmp, true)
-      }
+      PartitionSwap.healOne(f, new org.apache.hadoop.fs.Path(s"$indexDir/$t"),
+        new org.apache.hadoop.fs.Path(s"$indexDir/$t.tmp"))
     }
     // an interrupted delta fold (own commit protocol: see healFold)
     healFold(f, indexDir)
@@ -1557,13 +1523,12 @@ object EmbedOps {
   }
 
   /** The shared per-list deletion rewrite for any `partitionBy(list_id)`
-    * table (`table`), under its own `<ns>.tmp`/`<ns>.old` swap namespace
-    * so concurrent maintenance generations never clobber each other
-    * (ADVICE r11). Affected lists are found with a column-pruned
-    * (vec_id, list_id) scan joined to the broadcast deletion set; only
-    * those list dirs are rewritten (partition-pruned read, anti-join,
-    * per-list rename swap, previous generation parked under `<ns>.old`).
-    * Returns (rows deleted, affected list ids). */
+    * table (`table`), swapped through `PartitionSwap` under its own
+    * `<ns>.tmp`/`<ns>.old` namespace so concurrent maintenance generations
+    * never clobber each other (ADVICE r11). Affected lists come from a
+    * column-pruned (vec_id, list_id) scan joined to the broadcast deletion
+    * set; only those list dirs are rewritten. Returns (rows deleted,
+    * affected list ids). */
   private[queries] def deleteFromPartitioned(s: SparkSession, indexDir: String,
       table: String, ns: String, ids: DataFrame, pcol: String = "list_id",
       idCol: String = "vec_id"): (Long, Seq[Long]) = {
@@ -1580,26 +1545,14 @@ object EmbedOps {
       .where(col(pcol).isin(affected: _*)) // PartitionFilters: pruned
     val survivors = hit.join(broadcast(del), Seq(idCol), "left_anti")
     val nDel = hit.count() - survivors.count()
-    val root = new org.apache.hadoop.fs.Path(liveDir)
-    val f = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, root) = hfs(s, liveDir)
     val tmpRoot = s"$indexDir/$ns.tmp"
-    survivors.repartition(col(pcol))
-      .write.mode("overwrite").partitionBy(pcol).parquet(tmpRoot)
-    affected.foreach { lid =>
-      val live = new org.apache.hadoop.fs.Path(s"$liveDir/$pcol=$lid")
-      val tmp = new org.apache.hadoop.fs.Path(s"$tmpRoot/$pcol=$lid")
-      val oldP = new org.apache.hadoop.fs.Path(s"$indexDir/$ns.old/$pcol=$lid")
-      if (f.exists(oldP)) f.delete(oldP, true)
-      f.mkdirs(oldP.getParent)
-      if (f.exists(live) && !f.rename(live, oldP))
-        sys.error(s"delete swap failed: $live -> $oldP")
-      // a list whose every vector was deleted has no tmp dir: the rename
-      // above already emptied it out of the live layout
-      if (f.exists(tmp) && !f.rename(tmp, live))
-        sys.error(s"delete swap failed: $tmp -> $live " +
-          "(heal via reconcileSwaps: tmp present, live missing)")
-    }
-    f.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
+    survivors.repartition(col(pcol)).write.mode("overwrite").partitionBy(pcol).parquet(tmpRoot)
+    // a list whose every vector was deleted has no tmp dir: its swap only
+    // parks the live list (heal via reconcileSwaps)
+    PartitionSwap.commit(f, affected.map(lid => s"$pcol=$lid"),
+      new org.apache.hadoop.fs.Path(tmpRoot),
+      new org.apache.hadoop.fs.Path(s"$indexDir/$ns.old"))(new org.apache.hadoop.fs.Path(root, _))
     (nDel, affected)
   }
 
@@ -1650,25 +1603,15 @@ object EmbedOps {
       targetBytes: Long, pcol: String = "list_id",
       idCol: String = "vec_id",
       sortWithin: Seq[String] = Nil): Seq[(Long, Int, Int)] = {
-    val root = new org.apache.hadoop.fs.Path(s"$indexDir/$table")
-    val f = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (f, root) = hfs(s, s"$indexDir/$table")
     if (!f.exists(root)) return Nil
     val lists = f.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$pcol="))
       .flatMap(st => scala.util.Try(
         st.getPath.getName.stripPrefix(s"$pcol=").toLong)
         .toOption.map(_ -> st.getPath))
-    def stats(p: org.apache.hadoop.fs.Path): (Int, Long) = {
-      val it = f.listFiles(p, true)
-      var n = 0; var bytes = 0L
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) { n += 1; bytes += st.getLen }
-      }
-      (n, bytes)
-    }
     val hot = lists.sortBy(_._1).flatMap { case (lid, live) =>
-      val (n, bytes) = stats(live)
+      val (n, bytes, _) = PartitionSwap.fileStats(f, live)
       if (n <= ifMoreThan) None
       else Some((lid, live, n, math.max(1L, bytes / targetBytes).toInt))
     }
@@ -1694,20 +1637,10 @@ object EmbedOps {
       if (sortWithin.isEmpty) salted
       else salted.sortWithinPartitions((pcol +: sortWithin).map(col): _*)
     clustered.write.mode("overwrite").partitionBy(pcol).parquet(tmpRoot)
-    val done = hot.map { case (lid, live, n, _) =>
-      val tmp = new org.apache.hadoop.fs.Path(s"$tmpRoot/$pcol=$lid")
-      val oldP = new org.apache.hadoop.fs.Path(s"$indexDir/$ns.old/$pcol=$lid")
-      if (f.exists(oldP)) f.delete(oldP, true)
-      f.mkdirs(oldP.getParent)
-      if (!f.rename(live, oldP))
-        sys.error(s"compact swap failed: $live -> $oldP")
-      if (!f.rename(tmp, live))
-        sys.error(s"compact swap failed: $tmp -> $live " +
-          "(heal via reconcileSwaps: tmp present, live missing)")
-      (lid, n, stats(live)._1)
-    }
-    f.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
-    done
+    PartitionSwap.commit(f, hot.map(h => s"$pcol=${h._1}"),
+      new org.apache.hadoop.fs.Path(tmpRoot),
+      new org.apache.hadoop.fs.Path(s"$indexDir/$ns.old"))(new org.apache.hadoop.fs.Path(root, _))
+    hot.map { case (lid, live, n, _) => (lid, n, PartitionSwap.fileStats(f, live)._1) }
   }
 
   /** Zero-downtime retrain of a persisted IVF index (VERDICT r15 #3 —
@@ -1769,20 +1702,12 @@ object EmbedOps {
       val live = new org.apache.hadoop.fs.Path(s"$indexDir/$t")
       val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/rebuild.tmp/$t")
       val oldP = new org.apache.hadoop.fs.Path(s"$indexDir/rebuild.old/$t")
-      f.mkdirs(oldP.getParent)
       // live present + tmp present → this artifact not yet cut over:
       // park live, move tmp in. live missing + tmp present → the park
       // succeeded but the move didn't: finish it. tmp missing → done.
-      if (f.exists(tmp)) {
-        if (f.exists(live)) {
-          if (f.exists(oldP)) f.delete(oldP, true)
-          if (!f.rename(live, oldP))
-            sys.error(s"rebuild cutover failed: $live -> $oldP")
-        }
-        if (!f.rename(tmp, live))
-          sys.error(s"rebuild cutover failed: $tmp -> $live " +
-            "(heal via reconcileSwaps: rebuild.ready present)")
-      }
+      // (The swap is PartitionSwap's; the crash rule is the marker's:
+      // with rebuild.ready present, tmp beside live still rolls forward.)
+      if (f.exists(tmp)) PartitionSwap.commitOne(f, live, tmp, oldP)
     }
     f.delete(new org.apache.hadoop.fs.Path(s"$indexDir/rebuild.tmp"), true)
     f.delete(new org.apache.hadoop.fs.Path(s"$indexDir/rebuild.ready"), false)
@@ -1818,13 +1743,10 @@ object EmbedOps {
   }
 
   /** The shared flat-table takedown: anti-join survivors into a tmp dir,
-    * two-rename swap with the previous generation parked under `.old`
-    * for lazy readers, crash window healed by `reconcileSwaps` (tmp
-    * present + live missing → finish; both present → roll back). Swap
-    * renames are CHECKED (ADVICE r14 discipline): a silent rename
-    * failure would leave the table half-swapped. Returns ROWS deleted
-    * (one row per vector for SQ8/BQ; PQ_M per vector for PQ codes —
-    * callers normalize). */
+    * then `PartitionSwap.commitOne` (checked renames, previous generation
+    * parked under `.old`, crash window healed by `reconcileSwaps`).
+    * Returns ROWS deleted (one row per vector for SQ8/BQ; PQ_M per vector
+    * for PQ codes — callers normalize). */
   private[queries] def deleteFlat(s: SparkSession, tableDir: String,
       ids: DataFrame, idCol: String = "vec_id"): Long = {
     val del = ids.select(col(idCol)).distinct()
@@ -1841,12 +1763,7 @@ object EmbedOps {
       .write.mode("overwrite").parquet(tmp.toString)
     val nDel = parquetFooterRows(s, root) - parquetFooterRows(s, tmp)
     if (nDel == 0L) { f.delete(tmp, true); return 0L }
-    if (f.exists(old)) f.delete(old, true)
-    if (!f.rename(root, old))
-      sys.error(s"delete swap failed: $root -> $old (live left intact)")
-    if (!f.rename(tmp, root))
-      sys.error(s"delete swap failed: $tmp -> $root " +
-        "(heal via reconcileSwaps: tmp present, live missing)")
+    PartitionSwap.commitOne(f, root, tmp, old)
     nDel
   }
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.PartitionSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -521,12 +522,7 @@ object TextIndex {
     f.delete(tmp, true)
     s.read.schema(doclenSchema).parquet(p.toString).coalesce(outFiles)
       .write.mode("overwrite").parquet(tmp.toString)
-    if (f.exists(old)) f.delete(old, true)
-    if (!f.rename(p, old))
-      sys.error(s"doclen fold swap failed: $p -> $old (live left intact)")
-    if (!f.rename(tmp, p))
-      sys.error(s"doclen fold swap failed: $tmp -> $p " +
-        "(heal via reconcile: tmp present, live missing)")
+    PartitionSwap.commitOne(f, p, tmp, old)
     // the swap is complete — drop the displaced generation now instead of
     // parking a full copy of the table until the NEXT fold (ADVICE r18);
     // a crash before this delete leaves .old for reconcile's stale-.old
@@ -615,31 +611,18 @@ object TextIndex {
     * reads never do — they refuse loudly instead). */
   def reconcile(s: SparkSession, indexDir: String): Unit = {
     val conf = s.sparkContext.hadoopConfiguration
+    val f = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
     Seq("postings.del.tmp", "postings.compact.tmp").foreach { ns =>
-      val tmpRoot = new org.apache.hadoop.fs.Path(s"$indexDir/$ns")
-      val f = tmpRoot.getFileSystem(conf)
-      if (f.exists(tmpRoot)) {
-        f.listStatus(tmpRoot)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("tb="))
-          .foreach { st =>
-            val live = new org.apache.hadoop.fs.Path(
-              s"$indexDir/postings.parquet/${st.getPath.getName}")
-            if (!f.exists(live) && !f.rename(st.getPath, live))
-              sys.error(s"swap heal failed: ${st.getPath} -> $live")
-          }
-        f.delete(tmpRoot, true)
+      PartitionSwap.heal(f, new org.apache.hadoop.fs.Path(s"$indexDir/$ns")) {
+        case u if u.startsWith("tb=") =>
+          new org.apache.hadoop.fs.Path(s"$indexDir/postings.parquet/$u")
       }
     }
-    val f = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
     // the flat doclen swap (deleteFlat's tmp): tmp alone → finish;
     // both present → swap never started, discard tmp
     val live = new org.apache.hadoop.fs.Path(s"$indexDir/doclen.parquet")
     val ltmp = new org.apache.hadoop.fs.Path(s"$indexDir/doclen.parquet.tmp")
-    if (f.exists(ltmp)) {
-      if (!f.exists(live)) {
-        if (!f.rename(ltmp, live)) sys.error(s"swap heal failed: $ltmp -> $live")
-      } else f.delete(ltmp, true)
-    }
+    PartitionSwap.healOne(f, live, ltmp)
     // a .old beside a healthy live table is a fold that crashed between
     // its tmp->live rename and its .old delete (or a pre-r19 fold that
     // never deleted) — the displaced generation is debris (ADVICE r18)

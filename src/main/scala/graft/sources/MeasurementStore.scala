@@ -3,24 +3,29 @@ package graft.sources
 import graft.ql.{FieldMeta, TableMeta}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Durable measurement storage — the at-rest half of the write path the
   * reference delegates to its data nodes (`service/write_handler.go:157-212`
   * fans every batch out to nodes that persist it; an engine restart there
   * loses nothing). Layout under a root directory:
   *
-  *   dataDir/<measurement>/data/     parquet (partitionBy partition-key tags
-  *                                   when one is defined — read-side pruning
-  *                                   via PruneFileSourcePartitions for free)
-  *   dataDir/<measurement>/meta      one-line-per-attribute TableMeta
+  *   dataDir/<measurement>/data/_tb=N/  parquet per time bucket (the shard
+  *                                      group analog), then partitionBy
+  *                                      partition-key tags when defined
+  *   dataDir/<measurement>/meta         one-line-per-attribute TableMeta
+  *   dataDir/<measurement>/<ns>.tmp|old a rewrite's staged/displaced buckets
   *
   * Ingest is append-only: each batch lands as new parquet files — O(batch),
-  * never O(table), which is the property that holds at 100 TB. Deletes,
-  * retention expiry, and schema-widening rewrites go through `rewrite`:
-  * write the survivor set to a fresh `data.tmp`, then atomically swap
-  * directories — never overwrite a directory a lazy plan may still be
-  * reading (the classic self-overwrite corruption). All paths use the
-  * Hadoop FileSystem API, so the same code runs on HDFS/S3A.
+  * never O(table), which is the property that holds at 100 TB. Every other
+  * durable change (CQ patch, SELECT INTO, DELETE, retention, compaction)
+  * goes through ONE path, `replaceBuckets`, which swaps whole `_tb=N`
+  * buckets through `PartitionSwap` and never the whole table — the way
+  * InfluxDB compacts and drops one shard group at a time; `heal` resolves
+  * a crash between a bucket's two renames. A legacy unbucketed `data/` is
+  * one unit on the same path. All paths use the Hadoop FileSystem API, so
+  * the same code runs on HDFS/S3A.
   */
 object MeasurementStore {
 
@@ -46,17 +51,26 @@ object MeasurementStore {
     *    actionable error naming the lock path. Crash mid-write still
     *    leaves intact meta (per-call unique tmp + rename).
     *
-    * REWRITES (compaction/retention/delete) are maintenance with a
-    * single-maintainer contract: a rewrite racing an append can strand the
-    * append's files in the swapped-out directory — run maintenance from
-    * one owner, as Engine.maintain does. */
+    * REWRITES (`replaceBuckets`) take the same lock for their write and
+    * swap. A caller's rows are often a scan listed before that (the CQ
+    * patch, DELETE), so an append landing in a bucket between the listing
+    * and the swap is parked with the displaced generation: rewrites of
+    * buckets that still take appends belong to one owner, as the engine's
+    * serialized write path and Engine.maintain are. `compact` lists inside
+    * the lock, so it is safe beside appends. */
   private val writerLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private val lockDepth =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private val processId = java.util.UUID.randomUUID().toString
 
-  private def locked[T](spark: SparkSession, dir: String, m: String)(body: => T): T = {
+  private def locked[T](spark: SparkSession, dir: String, m: String)(body: => T): T =
+    withLease(spark, dir, m, skipIfHeld = false)(body).get
+
+  /** `body` under the monitor and lease; with `skipIfHeld`, None instead
+    * of waiting for a lease another live process holds. */
+  private def withLease[T](spark: SparkSession, dir: String, m: String,
+      skipIfHeld: Boolean)(body: => T): Option[T] = {
     val key = s"$dir/$m"
     writerLocks.computeIfAbsent(key, _ => new Object).synchronized {
       // the monitor admits one thread per measurement per JVM, so the
@@ -64,18 +78,21 @@ object MeasurementStore {
       // takes/releases the cross-process file lease (append → saveMeta
       // re-enters)
       val depth: Int = lockDepth.getOrDefault(key, 0)
-      if (depth == 0) acquireProcessLock(spark, dir, m)
-      lockDepth.put(key, depth + 1)
-      try body finally {
-        lockDepth.put(key, depth)
-        if (depth == 0) releaseProcessLock(spark, dir, m)
+      if (depth == 0 && !acquireProcessLock(spark, dir, m, skipIfHeld)) None
+      else {
+        lockDepth.put(key, depth + 1)
+        try Some(body) finally {
+          lockDepth.put(key, depth)
+          if (depth == 0) releaseProcessLock(spark, dir, m)
+        }
       }
     }
   }
 
   private def lockFile(dir: String, m: String) = new Path(s"$dir/$m/.writer.lock")
 
-  private def acquireProcessLock(spark: SparkSession, dir: String, m: String): Unit = {
+  private def acquireProcessLock(spark: SparkSession, dir: String, m: String,
+      skipIfHeld: Boolean): Boolean = {
     val waitMs = spark.conf.get("graft.store.lockWaitMs", "10000").toLong
     val staleMs = spark.conf.get("graft.store.lockStaleMs", "60000").toLong
     val lock = lockFile(dir, m)
@@ -86,7 +103,7 @@ object MeasurementStore {
       try {
         val out = f.create(lock, false) // atomic create-if-absent
         try out.write(processId.getBytes("UTF-8")) finally out.close()
-        return
+        return true
       } catch {
         case _: java.io.IOException =>
           val st = scala.util.Try(f.getFileStatus(lock)).toOption
@@ -94,6 +111,7 @@ object MeasurementStore {
             case Some(s) if System.currentTimeMillis() - s.getModificationTime > staleMs =>
               f.delete(lock, false) // crashed holder — break and retry
             case None => // holder released between create and stat — retry
+            case Some(_) if skipIfHeld => return false
             case Some(_) if System.currentTimeMillis() > deadline =>
               throw new IllegalStateException(
                 s"measurement '$m' is write-locked by another process " +
@@ -106,6 +124,7 @@ object MeasurementStore {
           }
       }
     }
+    false // unreachable: the loop only returns or throws
   }
 
   private def releaseProcessLock(spark: SparkSession, dir: String, m: String): Unit =
@@ -125,9 +144,9 @@ object MeasurementStore {
     * and a racing writer can never tear THIS writer's rename. With
     * `merge = true` (the APPEND path) the saved meta is unioned with the
     * one on disk (the newer side wins a per-name conflict) so interleaved
-    * widening appends keep both writers' field declarations; rewrite keeps
-    * merge = false — it replaced the whole table, so its meta is exact and
-    * may legitimately narrow. */
+    * widening appends keep both writers' field declarations; a rewrite of
+    * every bucket keeps merge = false — it replaced the whole table, so its
+    * meta is exact and may legitimately narrow. */
   def saveMeta(spark: SparkSession, dir: String, meta: TableMeta,
       keyTags: Seq[String] = Nil, uniform: Boolean = false,
       merge: Boolean = false): Unit =
@@ -202,27 +221,12 @@ object MeasurementStore {
       case _ => Nil
     }
 
-  /** True when every data file shares one schema (meta line 7, set by
-    * rewrite/compaction, cleared by append) — lets `read` skip mergeSchema,
+  /** True when every data file shares one schema (meta line 7: set by a
+    * rewrite, by `compact` when provable and by a new table's first append;
+    * cleared by any other append) — lets `read` skip mergeSchema,
     * which at 100 TB means NOT reading every parquet footer per scan. */
   def isUniform(spark: SparkSession, dir: String, m: String): Boolean =
     readMetaLines(spark, dir, m).exists(l => l.length > 6 && l(6) == "u")
-
-  /** (file count, total bytes) of the at-rest parquet data — drives the
-    * compaction trigger and the compacted file-count target. */
-  def dataFileStats(spark: SparkSession, dir: String, m: String): (Int, Long) = {
-    val p = new Path(dataPath(dir, m))
-    val f = fs(spark, p)
-    if (!f.exists(p)) return (0, 0L)
-    val it = f.listFiles(p, true)
-    var n = 0
-    var bytes = 0L
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.endsWith(".parquet")) { n += 1; bytes += s.getLen }
-    }
-    (n, bytes)
-  }
 
   private def readMetaLines(spark: SparkSession, dir: String, m: String): Option[Array[String]] =
     scala.util.Try {
@@ -281,6 +285,8 @@ object MeasurementStore {
     val layout = if (keyTags.nonEmpty) keyTags else loadKeyTags(spark, dir, meta.measurement)
     val bucket = storedBucketUs(spark, dir, meta.measurement).getOrElse(meta.bucketUs)
     val tagCols = layout.filter(batch.columns.contains)
+    val dataP = new Path(dataPath(dir, meta.measurement))
+    val empty = !fs(spark, dataP).exists(dataP)
     val singleTb: Option[Long] = for {
       b <- bucket
       if batch.columns.contains(meta.timeCol)
@@ -306,7 +312,7 @@ object MeasurementStore {
     // the partition columns makes it one writer (and one file) per
     // partition value. Partition count scales with the batch's Catalyst
     // size estimate (~32 MB per writer task, floor 4 for parallelism —
-    // measured sweet spot in tools/WriteProbe; a single writer serializes
+    // measured sweet spot of a write-path probe; a single writer serializes
     // 32 directories' worth of encoding). Time-bucket-only layouts skip
     // the exchange: a batch touches ~1 bucket, and the probe shows that
     // write already costs flat-write time.
@@ -317,71 +323,137 @@ object MeasurementStore {
         val bytes = data.queryExecution.optimizedPlan.stats.sizeInBytes
         val shuffleP = BigInt(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
         val p = (bytes / (32L * 1024 * 1024)).max(4).min(shuffleP).toInt
-        import org.apache.spark.sql.functions.col
         data.repartition(p, partCols.map(col): _*)
       }
     val w = clustered.write.mode("append")
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
       .parquet(target)
-    saveMeta(spark, dir, meta.copy(bucketUs = bucket), tagCols, merge = true)
+    // the first write into a new table is one schema (a table that DELETE
+    // or retention emptied is re-marked by `compact`)
+    saveMeta(spark, dir, meta.copy(bucketUs = bucket), tagCols, uniform = empty, merge = true)
   }
 
-  /** Replace the at-rest contents with `df` (delete compaction, retention
-    * expiry): materialize into `data.tmp`, then swap via rename — the
-    * source plan may lazily read the live directory, so the write must not
-    * touch it. */
-  def rewrite(spark: SparkSession, dir: String, meta: TableMeta, df: DataFrame,
-      keyTags: Seq[String] = Nil): Unit = locked(spark, dir, meta.measurement) {
-    val live = new Path(dataPath(dir, meta.measurement))
-    val tmp = new Path(dataPath(dir, meta.measurement) + ".tmp")
-    val old = new Path(dataPath(dir, meta.measurement) + ".old")
-    val f = fs(spark, live)
-    val layout = if (keyTags.nonEmpty) keyTags else loadKeyTags(spark, dir, meta.measurement)
-    val bucket = storedBucketUs(spark, dir, meta.measurement).getOrElse(meta.bucketUs)
-    val data = withTimeBucket(df, meta, bucket)
-    val w = data.write.mode("overwrite")
-    val tagCols = layout.filter(df.columns.contains)
-    val partCols = (if (bucket.isDefined && data.columns.contains("_tb")) Seq("_tb") else Nil) ++ tagCols
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-      .parquet(tmp.toString)
-    if (f.exists(old)) f.delete(old, true)
-    if (f.exists(live)) f.rename(live, old)
-    f.rename(tmp, live)
-    // keep .old until the NEXT rewrite (deleted above): a lazy plan handed
-    // out before this swap may still hold the pre-rewrite file listing —
-    // deleting immediately would fail it with FileNotFoundException
-    saveMeta(spark, dir, meta.copy(bucketUs = bucket), tagCols, uniform = true) // one write = one schema
-  }
+  /** `<m>/<ns>.tmp` stages a rewrite, `<m>/<ns>.old` parks what it
+    * displaced. `rewrite` serves INTO, DELETE and the CQ patch. */
+  private val Namespaces = Seq("rewrite", "compact", "expired")
 
-  /** Retention expiry as a PARTITION DROP (VERDICT r6 item 1): every
-    * top-level `_tb=N` directory whose bucket ends at or before `cutUs` is
-    * moved aside in one rename — O(expired partitions), never O(table),
-    * which is what survives at 100 TB where the old full-table rewrite
-    * would re-copy ~all live data to drop a day. The boundary bucket
-    * straddling the cutoff keeps its rows (reads mask them via the
-    * plan-time cutoff filter) and is reclaimed when it fully expires.
-    * Dropped buckets land in `<m>/expired.old` until the next expiry pass —
-    * same grace rule as rewrite's `.old`: a lazy plan handed out before the
-    * drop may still hold the old file listing. Returns dropped dir names. */
-  def expireBuckets(spark: SparkSession, dir: String, m: String, cutUs: Long): Seq[String] = {
-    val bucketUs = loadMeta(spark, dir, m).flatMap(_.bucketUs).getOrElse(return Nil)
+  /** A swap unit: the `_tb=N` directory, or on a legacy unbucketed layout
+    * `data` itself, as one bucket (id 0). */
+  private def unitName(bucketUs: Option[Long], tb: Long): String =
+    if (bucketUs.isDefined) s"_tb=$tb" else "data"
+
+  private def unitPath(dir: String, m: String, unit: String): Path =
+    if (unit == "data") new Path(dataPath(dir, m)) else new Path(dataPath(dir, m), unit)
+
+  private def isUnit(name: String) = name.startsWith("_tb=") || name == "data"
+
+  /** The live bucket ids (`Seq(0)` on a legacy layout with data). */
+  def liveBuckets(spark: SparkSession, dir: String, m: String): Seq[Long] = {
     val data = new Path(dataPath(dir, m))
     val f = fs(spark, data)
-    if (!f.exists(data)) return Nil
-    val expired = f.listStatus(data).toSeq
+    if (!f.exists(data)) Nil
+    else if (storedBucketUs(spark, dir, m).flatten.isEmpty) Seq(0L)
+    else f.listStatus(data).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("_tb="))
-      .filter { st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("_tb=").toLong).toOption
-          .exists(tb => (tb + 1L) * bucketUs <= cutUs)
-      }
-      .map(_.getPath)
-    if (expired.nonEmpty) {
-      val trash = new Path(s"$dir/$m/expired.old")
-      if (f.exists(trash)) f.delete(trash, true)
-      f.mkdirs(trash)
-      expired.foreach(p => f.rename(p, new Path(trash, p.getName)))
+      .flatMap(st => scala.util.Try(st.getPath.getName.stripPrefix("_tb=").toLong).toOption)
+      .sorted
+  }
+
+  /** The bucket ids overlapping the µs span [loUs, hiUs): the stored
+    * width, else `meta`'s for a first write; truncating, like `_tb`. */
+  def bucketIdsCovering(spark: SparkSession, dir: String, meta: TableMeta,
+      loUs: Long, hiUs: Long): Seq[Long] =
+    storedBucketUs(spark, dir, meta.measurement).getOrElse(meta.bucketUs) match {
+      case Some(b) => loUs / b to (hiUs - 1) / b
+      case None    => Seq(0L)
     }
-    expired.map(_.getName)
+
+  /** The bucket ids that rows of a frame read from this store lie in. */
+  def bucketIdsOf(rows: DataFrame): Seq[Long] =
+    if (rows.columns.contains("_tb"))
+      rows.select(col("_tb").cast("long")).distinct().collect().map(_.getLong(0)).toSeq.sorted
+    else if (rows.isEmpty) Nil
+    else Seq(0L)
+
+  /** The rows of `buckets` in a frame read from this store: a `_tb`
+    * partition filter, so the scan prunes; all of it on a legacy layout. */
+  def inBuckets(df: DataFrame, buckets: Seq[Long]): DataFrame =
+    if (df.columns.contains("_tb")) df.where(col("_tb").cast("long").isin(buckets: _*))
+    else df
+
+  /** The one durable rewrite: afterwards `buckets`, plus any bucket a row
+    * of `rows` falls in, hold exactly `rows`; every other bucket is
+    * byte-untouched. Each unit swaps through `PartitionSwap` under `ns`; a
+    * listed bucket with no rows leaves the layout (no columns drops them
+    * all). On a legacy layout `rows` is the whole table. Callers: the CQ
+    * patch, INTO, DELETE, retention (`expired`) and `compact`. */
+  def replaceBuckets(spark: SparkSession, dir: String, meta: TableMeta, rows: DataFrame,
+      buckets: Seq[Long], ns: String, keyTags: Seq[String] = Nil): Unit =
+    locked(spark, dir, meta.measurement) {
+      require(Namespaces.contains(ns), s"unknown rewrite namespace '$ns'")
+      val m = meta.measurement
+      heal(spark, dir, m)
+      val f = fs(spark, new Path(dir))
+      val layout = if (keyTags.nonEmpty) keyTags else loadKeyTags(spark, dir, m)
+      val bucket = storedBucketUs(spark, dir, m).getOrElse(meta.bucketUs)
+      val tagCols = if (rows.columns.isEmpty) layout else layout.filter(rows.columns.contains)
+      val tmpRoot = new Path(s"$dir/$m/$ns.tmp")
+      val before = liveBuckets(spark, dir, m).map(unitName(bucket, _))
+      val wasUniform = isUniform(spark, dir, m)
+      if (rows.columns.nonEmpty) {
+        val (data, target, partCols) = bucket match {
+          case Some(_) => (withTimeBucket(rows, meta, bucket), tmpRoot.toString, "_tb" +: tagCols)
+          case None    => (rows.drop("_tb"), s"$tmpRoot/data", tagCols)
+        }
+        val w = data.write.mode("overwrite")
+        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(target)
+      }
+      val written =
+        if (!f.exists(tmpRoot)) Nil
+        else f.listStatus(tmpRoot).toSeq.filter(_.isDirectory).map(_.getPath.getName).filter(isUnit)
+      val units = (buckets.map(unitName(bucket, _)) ++ written).distinct
+      val oldRoot = new Path(s"$dir/$m/$ns.old")
+      // one generation of grace for a lazy plan's old listing: a compacted
+      // bucket compacts again, a dropped one never comes back
+      if (ns != "compact") f.delete(oldRoot, true)
+      PartitionSwap.commit(f, units, tmpRoot, oldRoot)(unitPath(dir, m, _))
+      if (rows.columns.nonEmpty) { // uniform: new files match the survivors'
+        val coversAll = before.forall(units.contains)
+        def firstFile(units: Seq[String]) =
+          units.iterator.flatMap(u => PartitionSwap.parquetFiles(f, unitPath(dir, m, u)))
+            .map(_.getPath).nextOption()
+        val uniform = coversAll || (wasUniform &&
+          firstFile(written).forall(n => firstFile(before.filterNot(units.contains))
+            .forall(o => footerSchema(spark, n) == footerSchema(spark, o))))
+        saveMeta(spark, dir, meta.copy(bucketUs = bucket), tagCols,
+          uniform = uniform, merge = !coversAll)
+      }
+    }
+
+  /** `PartitionSwap.heal` of every rewrite namespace, at Engine restore
+    * and each `replaceBuckets` entry (which holds the lease already).
+    * Restore does not wait for the lease: a live holder may be mid-swap
+    * (its staged bucket is not debris) and heals at its own next entry; a
+    * crashed holder's lease breaks after `lockStaleMs`. */
+  def heal(spark: SparkSession, dir: String, m: String): Unit = {
+    val f = fs(spark, new Path(dir))
+    val tmps = Namespaces.map(ns => new Path(s"$dir/$m/$ns.tmp")).filter(f.exists)
+    if (tmps.nonEmpty) withLease(spark, dir, m, skipIfHeld = true) {
+      tmps.foreach(PartitionSwap.heal(f, _) { case u if isUnit(u) => unitPath(dir, m, u) })
+    }
+  }
+
+  /** A data file's schema from the row metadata Spark writes into its
+    * parquet footer: one driver-side footer read, never a job. */
+  private def footerSchema(spark: SparkSession, file: Path): Set[(String, DataType)] = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        spark.sparkContext.hadoopConfiguration))
+    val json = try r.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata") finally r.close()
+    val schema = Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(spark.read.parquet(file.toString).schema)
+    schema.map(fld => (fld.name, fld.dataType)).toSet
   }
 
   /** The write-path frame schema implied by a TableMeta (Engine
@@ -399,107 +471,54 @@ object MeasurementStore {
     s
   }
 
-  /** Whether the at-rest layout is time-bucketed (`_tb=N` top-level
-    * directories) — decides which compaction shape applies. */
-  def bucketedLayout(spark: SparkSession, dir: String, m: String): Boolean =
-    storedBucketUs(spark, dir, m).flatten.isDefined
-
-  /** Per-bucket small-file compaction — the O(hot-buckets) maintenance
-    * pass for bucketed layouts. The whole-table `rewrite` is O(table):
-    * at 100 TB with years of shard groups, merging the CURRENT bucket's
-    * append debris must not re-copy every cold bucket. Each top-level
-    * `_tb=N` directory whose parquet file count exceeds `ifMoreThan` is
-    * rewritten ALONE: read just that directory, cluster by the tag
-    * layout (one writer per tag value — same discipline as the clustered
-    * append), land in `<m>/compact.tmp/_tb=N`, swap via rename. The
-    * previous generation parks under `<m>/compact.old/_tb=N` until the
-    * same bucket's next compaction — a lazy plan handed out before the
-    * swap may still hold the old file listing (same discipline as
-    * `rewrite`; `.old`/`.tmp` live OUTSIDE `data/` so partition
-    * discovery never sees them). Reference analog: the data nodes'
-    * storage engine compacts per shard group, not per database
-    * (service/write_handler.go:157-212 lands batches; compaction folds
-    * them in the background). Single-maintainer contract like all
-    * rewrites. Returns (bucket, filesBefore, filesAfter). */
-  def compactBuckets(spark: SparkSession, dir: String, m: String,
+  /** Small-file compaction per bucket — O(hot buckets), never O(table),
+    * as the reference data nodes' storage engine compacts per shard group
+    * (service/write_handler.go:157-212). A bucket is hot when it holds
+    * more than `ifMoreThan` files AND some leaf directory holds more than
+    * one (one file per tag directory is already the compacted layout). It
+    * is replaced by its own rows, one writer per tag value, under the
+    * `compact` namespace (`<m>/compact.old/_tb=N` parks the previous
+    * generation). Returns (bucket, filesBefore, filesAfter). */
+  def compact(spark: SparkSession, dir: String, m: String,
       ifMoreThan: Int = 8, targetBytes: Long = 512L << 20): Seq[(Long, Int, Int)] =
     locked(spark, dir, m) {
-      val dataP = new Path(dataPath(dir, m))
-      val f = fs(spark, dataP)
-      if (!f.exists(dataP)) return Nil
+      val meta = loadMeta(spark, dir, m).getOrElse(return Nil)
+      val f = fs(spark, new Path(dir))
       val layout = loadKeyTags(spark, dir, m)
-      val buckets = f.listStatus(dataP).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("_tb="))
-        .flatMap(st => scala.util.Try(st.getPath.getName.stripPrefix("_tb=").toLong)
-          .toOption.map(_ -> st.getPath))
-      def bucketStats(p: Path): (Int, Long) = {
-        val it = f.listFiles(p, true)
-        var n = 0; var bytes = 0L
-        while (it.hasNext) {
-          val s = it.next()
-          if (s.getPath.getName.endsWith(".parquet")) { n += 1; bytes += s.getLen }
+      val done = liveBuckets(spark, dir, m).flatMap { tb =>
+        val unit = unitPath(dir, m, unitName(meta.bucketUs, tb))
+        val (n, bytes, fullestLeaf) = PartitionSwap.fileStats(f, unit)
+        if (n <= ifMoreThan || fullestLeaf <= 1) None
+        else {
+          // the bucket's own files, listed inside the lock (no append can
+          // land before the swap); inference off, or a zero-padded tag
+          // value ("00123") would write back under a RENAMED directory
+          val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
+          val prevInfer = spark.conf.get(inferKey, "true")
+          spark.conf.set(inferKey, "false")
+          val df = try spark.read.option("mergeSchema", "true")
+            .option("basePath", dataPath(dir, m)).parquet(unit.toString)
+          finally spark.conf.set(inferKey, prevInfer)
+          val tagCols = layout.filter(df.columns.contains)
+          val nFiles = math.max(1L, bytes / targetBytes).toInt
+          val out =
+            if (tagCols.isEmpty) df.coalesce(nFiles)
+            else df.repartition(math.max(nFiles, 4), tagCols.map(col): _*)
+          replaceBuckets(spark, dir, meta, out, Seq(tb), "compact", layout)
+          Some((tb, n, PartitionSwap.fileStats(f, unit)._1))
         }
-        (n, bytes)
       }
-      // partition-value inference OFF for the round trip: a zero-padded
-      // numeric tag value ("00123") inferred as int would write back as a
-      // RENAMED directory ("123") — values must survive verbatim
-      val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-      val prevInfer = spark.conf.get(inferKey, "true")
-      spark.conf.set(inferKey, "false")
-      try {
-        val done = buckets.sortBy(_._1).flatMap { case (tb, live) =>
-          val (n, bytes) = bucketStats(live)
-          if (n <= ifMoreThan) None
-          else {
-            import org.apache.spark.sql.functions.col
-            val df = spark.read.option("mergeSchema", "true").parquet(live.toString)
-            val tagCols = layout.filter(df.columns.contains)
-            val nFiles = math.max(1L, bytes / targetBytes).toInt
-            val out =
-              if (tagCols.isEmpty) df.coalesce(nFiles)
-              // hash by tags: every tag value lands in exactly one writer
-              // → one file per tag directory regardless of task count
-              else df.repartition(math.max(nFiles, 4), tagCols.map(col): _*)
-            val tmp = new Path(s"$dir/$m/compact.tmp/_tb=$tb")
-            val oldB = new Path(s"$dir/$m/compact.old/_tb=$tb")
-            val w = out.write.mode("overwrite")
-            (if (tagCols.nonEmpty) w.partitionBy(tagCols: _*) else w)
-              .parquet(tmp.toString)
-            if (f.exists(oldB)) f.delete(oldB, true)
-            f.mkdirs(oldB.getParent)
-            f.rename(live, oldB)
-            f.rename(tmp, live)
-            Some((tb, n, bucketStats(live)._1))
-          }
-        }
-        // restore the uniform-schema fast path (O(1) footer reads per
-        // scan) when PROVABLE: every remaining leaf file carries the same
-        // data schema (per-FILE footers — a bucket-level merged read
-        // would hide a mixed-schema skipped bucket). Compacted buckets
-        // are 1-2 files and skipped ones hold ≤ifMoreThan, so this is a
-        // bounded maintenance-time check; bail above a footer budget.
-        if (done.nonEmpty && !isUniform(spark, dir, m)) {
-          val leafFiles = {
-            val it = f.listFiles(dataP, true)
-            val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-            while (it.hasNext) {
-              val s0 = it.next()
-              if (s0.getPath.getName.endsWith(".parquet")) buf += s0.getPath.toString
-            }
-            buf.toSeq
-          }
-          if (leafFiles.size <= 256) {
-            val schemas = leafFiles.map(p =>
-              spark.read.parquet(p).schema
-                .map(fld => (fld.name, fld.dataType)).toSet).distinct
-            if (schemas.size == 1)
-              loadMeta(spark, dir, m).foreach(meta =>
-                saveMeta(spark, dir, meta, layout, uniform = true))
-          }
-        }
-        done
-      } finally spark.conf.set(inferKey, prevInfer)
+      // restore the uniform-schema fast path when PROVABLE — whether or not
+      // a bucket needed rewriting: every data file carries one schema (a
+      // bounded footer check)
+      if (!isUniform(spark, dir, m)) {
+        import scala.collection.parallel.CollectionConverters._
+        val files = PartitionSwap.parquetFiles(f, new Path(dataPath(dir, m))).take(257)
+          .map(_.getPath).toSeq
+        if (files.size <= 256 && files.par.map(footerSchema(spark, _)).seq.distinct.size == 1)
+          loadMeta(spark, dir, m).foreach(mm => saveMeta(spark, dir, mm, layout, uniform = true))
+      }
+      done
     }
 
   /** Lazy scan of the durable measurement. mergeSchema only when appended

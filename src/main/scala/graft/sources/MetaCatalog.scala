@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * record per line; record fields are joined by U+001F with `\`-escaping for
   * the separator and newlines. The Engine owns the mapping between records
   * and its typed stores — this object is just crash-safe file I/O. Writes go
-  * through tmp+rename (the same discipline as MeasurementStore.rewrite), so
+  * through tmp+rename (the same discipline as MeasurementStore.saveMeta), so
   * a crash mid-persist leaves the previous intact snapshot, never a torn
   * file. Metadata is tiny (KBs), so snapshot-per-mutation is the right
   * trade — identical to etcd's full-durability semantics without a quorum.

@@ -15,6 +15,22 @@ class DurabilitySpec extends SparkSpec {
   private val meta = TableMeta("dm", "ts_us",
     tags = Seq("type"), fields = Seq(FieldMeta("v", Some(100L))))
 
+  /** (parquet files, bytes) under the measurement's live data directory. */
+  private def dataFileStats(dir: String, m: String = "dm"): (Int, Long) = {
+    val p = new org.apache.hadoop.fs.Path(graft.sources.MeasurementStore.dataPath(dir, m))
+    val (n, bytes, _) = graft.sources.PartitionSwap.fileStats(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    (n, bytes)
+  }
+
+  /** (path, length, mtime) of every file under `root` — byte-untouched
+    * evidence: a rewritten directory changes at least one of the three. */
+  private def fileState(root: String): Set[(String, Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(root)).map(f => (f.getPath, f.length, f.lastModified)).toSet
+  }
+
   test("written points survive an engine restart on the same dataDir") {
     val dir = tmpDir()
     val e1 = new Engine(spark, sfDir, Some(dir))
@@ -244,7 +260,7 @@ class DurabilitySpec extends SparkSpec {
     (1 to 20).foreach { i =>
       e.writeLineProtocol(Seq(s"dm,type=t$i v=$i ${i.toLong * 1000000000}"), "dm")
     }
-    def stats() = graft.sources.MeasurementStore.dataFileStats(spark, dir, "dm")
+    def stats() = dataFileStats(dir)
     assert(stats()._1 >= 20) // one+ file per append
     val before = e.execute("SELECT v FROM dm").collect()
       .map(r => (r.getAs[Long]("time"), r.getAs[Double]("v"))).toSet
@@ -299,7 +315,7 @@ class DurabilitySpec extends SparkSpec {
       .select("ts_us", "type", "v").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
 
-    val done = MeasurementStore.compactBuckets(spark, dir, "dm", ifMoreThan = 4)
+    val done = MeasurementStore.compact(spark, dir, "dm", ifMoreThan = 4)
     // only the hot bucket compacted; its file count collapsed to one per
     // tag value; the cold bucket's files are byte-identical
     assert(done.map(_._1) == Seq(1L), s"compacted: $done")
@@ -321,7 +337,7 @@ class DurabilitySpec extends SparkSpec {
         Seq((ts2 + i, "t0", 9.9)).toDF("ts_us", "type", "v"),
         keyTags = Seq("type"), timeBounds = Some((ts2 + i, ts2 + i)))
     }
-    val done2 = MeasurementStore.compactBuckets(spark, dir, "dm", ifMoreThan = 4)
+    val done2 = MeasurementStore.compact(spark, dir, "dm", ifMoreThan = 4)
     assert(done2.map(_._1) == Seq(1L))
     assert(MeasurementStore.read(spark, dir, "dm").get._1.count() == before.size + 6)
   }
@@ -337,7 +353,7 @@ class DurabilitySpec extends SparkSpec {
     val before = e.execute("SELECT v FROM dm").collect()
       .map(r => (r.getAs[Long]("time"), r.getAs[Double]("v"))).toSet
     e.maintain(compactIfMoreThan = 4)
-    val (filesAfter, _) = graft.sources.MeasurementStore.dataFileStats(spark, dir, "dm")
+    val (filesAfter, _) = dataFileStats(dir)
     assert(filesAfter <= 4, s"files=$filesAfter")
     val after = e.execute("SELECT v FROM dm").collect()
       .map(r => (r.getAs[Long]("time"), r.getAs[Double]("v"))).toSet
@@ -543,5 +559,103 @@ class DurabilitySpec extends SparkSpec {
     val e2 = new Engine(spark, sfDir, Some(dir))
     e2.nowUs = () => now
     assert(e2.execute("SELECT v FROM dm").collect().map(_.getAs[Double]("v")).toSet == Set(2.0))
+  }
+
+  test("each retention pass parks only its own expired buckets under expired.old") {
+    val dir = tmpDir()
+    val e = new Engine(spark, sfDir, Some(dir))
+    val hourUs = 3600L * 1000000
+    var now = 10 * hourUs + hourUs / 2 // cut 9h30: bucket 8 expires
+    e.nowUs = () => now
+    e.execute("CREATE RETENTION POLICY short ON default DURATION 1h REPLICATION 1")
+    e.registerMeasurement(meta, spark.emptyDataFrame)
+    e.setRetentionPolicy("dm", "default", "short") // 1h RP → 1h buckets
+    e.writeLineProtocol((8 to 10).map(h =>
+      s"dm,type=a v=$h ${(h * hourUs + 45 * 60000000L) * 1000}"), "dm")
+    def parked() = new java.io.File(s"$dir/dm/expired.old").listFiles()
+      .map(_.getName).toSet
+    e.enforceRetention()
+    assert(parked() == Set("_tb=8"))
+    now += hourUs // cut 10h30: bucket 9 expires
+    e.enforceRetention()
+    assert(parked() == Set("_tb=9"), "an earlier pass's bucket was never freed")
+    assert(e.execute("SELECT v FROM dm").collect().map(_.getAs[Double]("v")).toSet == Set(10.0))
+  }
+
+  test("retention on a legacy unbucketed layout rewrites it without the expired rows") {
+    import graft.sources.MeasurementStore
+    val dir = tmpDir()
+    val s = spark
+    import s.implicits._
+    val hourUs = 3600L * 1000000
+    val now = 10 * hourUs
+    // `meta` has no bucket width: the directory is the legacy `data/` layout
+    MeasurementStore.append(spark, dir, meta,
+      Seq((now - 2 * hourUs, "a", 1.0), (now - 60000000L, "b", 2.0)).toDF("ts_us", "type", "v"))
+    assert(MeasurementStore.loadMeta(spark, dir, "dm").get.bucketUs.isEmpty)
+    val e = new Engine(spark, sfDir, Some(dir))
+    e.nowUs = () => now
+    e.execute("CREATE RETENTION POLICY short ON default DURATION 1h REPLICATION 1")
+    e.setRetentionPolicy("dm", "default", "short")
+    e.enforceRetention()
+    assert(spark.read.parquet(s"$dir/dm/data").select("v").as[Double].collect().toSet == Set(2.0),
+      "the expired row is still at rest")
+    assert(new java.io.File(s"$dir/dm/expired.old/data").isDirectory)
+    assert(MeasurementStore.loadMeta(spark, dir, "dm").get.bucketUs.isEmpty) // still legacy
+  }
+
+  test("a CQ patch replaces only the target buckets it touched; the others stay byte-identical") {
+    val dir = tmpDir()
+    val e = new Engine(spark, sfDir, Some(dir))
+    e.registerMeasurement(meta, spark.emptyDataFrame)
+    val dayNs = 86400L * 1000000000L
+    // autogen → 7-day buckets: the target spans three of them
+    e.writeLineProtocol(Seq(
+      s"dm,type=a v=1 ${dayNs / 2}",
+      s"dm,type=a v=2 ${8 * dayNs}",
+      s"dm,type=a v=3 ${15 * dayNs}"), "dm")
+    e.execute("CREATE CONTINUOUS QUERY cq1h ON default BEGIN " +
+      "SELECT mean(v) INTO dm_1h FROM dm GROUP BY time(1h) END")
+    val buckets = new java.io.File(s"$dir/dm_1h/data").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    assert(buckets == Set("_tb=0", "_tb=1", "_tb=2"), buckets)
+    val cold0 = fileState(s"$dir/dm_1h/data/_tb=0")
+    val cold1 = fileState(s"$dir/dm_1h/data/_tb=1")
+    val hot2 = fileState(s"$dir/dm_1h/data/_tb=2")
+
+    e.writeLineProtocol(Seq(s"dm,type=b v=5 ${15 * dayNs + 60L * 1000000000L}"), "dm")
+    assert(fileState(s"$dir/dm_1h/data/_tb=0") == cold0, "untouched bucket 0 was rewritten")
+    assert(fileState(s"$dir/dm_1h/data/_tb=1") == cold1, "untouched bucket 1 was rewritten")
+    assert(fileState(s"$dir/dm_1h/data/_tb=2") != hot2, "the touched bucket was not patched")
+    def target(e: Engine) = e.execute("SELECT * FROM dm_1h").collect()
+      .map(r => (r.getAs[Long]("time"), r.getAs[Double]("mean"))).toSet
+    val hourUs = 3600L * 1000000L
+    val expect = Set((12 * hourUs, 1.0), (8 * 24 * hourUs, 2.0), (15 * 24 * hourUs, 4.0))
+    assert(target(e) == expect)
+    assert(target(new Engine(spark, sfDir, Some(dir))) == expect) // restart
+  }
+
+  test("maintain() on a store with one file per leaf directory rewrites nothing") {
+    import graft.sources.MeasurementStore
+    val dir = tmpDir()
+    val e = new Engine(spark, sfDir, Some(dir))
+    e.execute("CREATE PARTITION KEY type ON default.dm")
+    e.registerMeasurement(meta, spark.emptyDataFrame)
+    // two clustered appends: one file in each of 8 tag directories of _tb=0
+    def lines(r: Range) = r.map(i => s"dm,type=t$i v=$i ${(i + 1) * 1000000000L}")
+    e.writeLineProtocol(lines(0 until 4), "dm")
+    assert(MeasurementStore.isUniform(spark, dir, "dm")) // one write, one schema
+    e.writeLineProtocol(lines(4 until 8), "dm")
+    assert(!MeasurementStore.isUniform(spark, dir, "dm"))
+    assert(dataFileStats(dir)._1 == 8)
+    val before = fileState(s"$dir/dm/data")
+    val rows = e.execute("SELECT v FROM dm").collect().map(_.getAs[Double]("v")).toSet
+
+    e.maintain(compactIfMoreThan = 4) // 8 files > 4, but every leaf holds one
+    assert(fileState(s"$dir/dm/data") == before, "an already-compact bucket was rewritten")
+    assert(!new java.io.File(s"$dir/dm/compact.old").exists())
+    // nothing rewritten, yet every file provably has one schema again
+    assert(MeasurementStore.isUniform(spark, dir, "dm"))
+    assert(e.execute("SELECT v FROM dm").collect().map(_.getAs[Double]("v")).toSet == rows)
   }
 }

@@ -47,6 +47,27 @@ class HttpApiSpec extends SparkSpec {
     }
   }
 
+  test("a body above InfluxDB's max-body-size answers 413, plain or once gunzipped") {
+    withApi { (_, base) =>
+      val big = Array.fill[Byte](HttpApi.MaxBodyBytes + 1)('\n'.toByte)
+      val w = post(s"$base/write?db=default", big)
+      assert(w.statusCode() == 413, w.body())
+      assert(w.body().contains("\"error\":\"Request Entity Too Large\""), w.body())
+      val q = post(s"$base/query", big, "Content-Type" -> "application/x-www-form-urlencoded")
+      assert(q.statusCode() == 413, q.body())
+      // a gzip body small on the wire but past the limit decompressed
+      val bos = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(bos)
+      try gz.write(big) finally gz.close()
+      assert(bos.size() < HttpApi.MaxBodyBytes / 100)
+      val g = post(s"$base/write?db=default", bos.toByteArray, "Content-Encoding" -> "gzip")
+      assert(g.statusCode() == 413, g.body())
+      // the server keeps serving
+      val ok = post(s"$base/write?db=default", "big_ok,host=a v=1 1000000000".getBytes(UTF_8))
+      assert(ok.statusCode() == 204, ok.body())
+    }
+  }
+
   test("write → query round trip; a mixed-measurement body fans in per measurement") {
     withApi { (_, base) =>
       val body = Seq(

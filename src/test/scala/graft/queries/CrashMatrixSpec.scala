@@ -99,6 +99,75 @@ class CrashMatrixSpec extends SparkSpec {
     assert(ranks(idx) == expect, "row 3: forward-healed content diverged")
   }
 
+  /** A durable measurement with rows in two 7-day buckets, _tb=0 and _tb=1. */
+  private def durableStore(tag: String): (String, Set[(Long, Double)]) = {
+    val dir = graft.TempDirs.scratch(tag).toString
+    val e = new graft.Engine(spark, sfDir, Some(dir))
+    val dayNs = 86400L * 1000000000L
+    e.writeLineProtocol(Seq(
+      s"cm,host=a v=1 ${dayNs}", s"cm,host=b v=2 ${2 * dayNs}",
+      s"cm,host=a v=3 ${9 * dayNs}"), "cm")
+    (dir, rowsOf(new graft.Engine(spark, sfDir, Some(dir))))
+  }
+
+  private def rowsOf(e: graft.Engine): Set[(Long, Double)] =
+    e.execute("SELECT v FROM cm").collect()
+      .map(r => (r.getAs[Long]("time"), r.getAs[Double]("v"))).toSet
+
+  test("rows 3+4 (store): an orphaned <ns>.tmp bucket rolls FORWARD at " +
+      "Engine restore; a tmp bucket beside its live bucket is discarded") {
+    // row 3: a rewrite died between the bucket's two renames — live
+    // parked, the replacement staged under rewrite.tmp, nothing live
+    val (dir, expect) = durableStore("cm_store_fwd")
+    val live = new Path(s"$dir/cm/data/_tb=0")
+    val staged = new Path(s"$dir/cm/rewrite.tmp/_tb=0")
+    fs.mkdirs(staged.getParent)
+    assert(fs.rename(live, staged), "fixture: stage the bucket")
+    val e = new graft.Engine(spark, sfDir, Some(dir)) // restore heals
+    assert(fs.exists(live) && !fs.exists(staged.getParent),
+      "row 3: restore must roll the orphaned bucket forward")
+    assert(rowsOf(e) == expect, "row 3: rows lost in the crash window")
+
+    // row 4: the rewrite died before its first rename — a staged copy
+    // beside the live bucket is discarded, the live bucket untouched
+    val (dir2, expect2) = durableStore("cm_store_back")
+    val live2 = new Path(s"$dir2/cm/data/_tb=1")
+    val staged2 = new Path(s"$dir2/cm/compact.tmp/_tb=1")
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, live2, fs, staged2, false,
+      spark.sparkContext.hadoopConfiguration), "fixture: stage a copy")
+    val liveFiles = fs.listStatus(live2).map(st => (st.getPath.getName, st.getLen)).toSet
+    val e2 = new graft.Engine(spark, sfDir, Some(dir2))
+    assert(!fs.exists(staged2.getParent), "row 4: the staged bucket must be discarded")
+    assert(fs.listStatus(live2).map(st => (st.getPath.getName, st.getLen)).toSet == liveFiles,
+      "row 4: the live bucket must stay untouched")
+    assert(rowsOf(e2) == expect2, "row 4: rows duplicated or lost")
+  }
+
+  test("rows 3+4 (store): restore leaves a staged bucket alone while another " +
+      "live process holds the writer lease") {
+    // the holder may be between its tmp write and its commit: its staged
+    // bucket is not debris. Restore must neither wait nor discard it
+    val (dir, expect) = durableStore("cm_store_lease")
+    val live = new Path(s"$dir/cm/data/_tb=1")
+    val staged = new Path(s"$dir/cm/rewrite.tmp/_tb=1")
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, live, fs, staged, false,
+      spark.sparkContext.hadoopConfiguration), "fixture: stage a copy")
+    val lock = new Path(s"$dir/cm/.writer.lock")
+    val out = fs.create(lock, false)
+    try out.write("other-process".getBytes("UTF-8")) finally out.close()
+    val e = new graft.Engine(spark, sfDir, Some(dir))
+    assert(fs.exists(staged), "a live holder's staged bucket was discarded")
+    assert(fs.exists(lock), "restore took a lease it does not hold")
+    assert(rowsOf(e) == expect)
+
+    // the holder crashed: its lease goes stale and the next restore heals
+    fs.setTimes(lock, System.currentTimeMillis() - 3600 * 1000, -1)
+    val e2 = new graft.Engine(spark, sfDir, Some(dir))
+    assert(!fs.exists(staged.getParent), "a crashed holder's staged bucket survived")
+    assert(!fs.exists(lock))
+    assert(rowsOf(e2) == expect)
+  }
+
   test("rows 5+8+9: doclen flat swap heals FORWARD; dirty markers refuse " +
       "reads and heal by recompute/re-derive") {
     val s = spark

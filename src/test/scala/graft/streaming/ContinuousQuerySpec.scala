@@ -151,6 +151,27 @@ class ContinuousQuerySpec extends SparkSpec {
     assert(streamed.size == 3)
   }
 
+  test("CREATE CONTINUOUS QUERY on a partition-keyed source with no data backfills " +
+      "nothing; the first write lands in the target") {
+    val dataDir = graft.TempDirs.scratch("graft_cq_empty").toString
+    val e = new graft.Engine(spark, sfDir, Some(dataDir))
+    e.execute("CREATE PARTITION KEY host ON default.cq_empty")
+    // InfluxDB 1.x stores a CQ without checking that its source exists
+    e.execute(
+      """CREATE CONTINUOUS QUERY cq_e ON default BEGIN
+        |SELECT mean(usage) INTO cq_empty_1m FROM cq_empty GROUP BY time(1m), host
+        |END""".stripMargin)
+    e.writeLineProtocol(Seq(
+      "cq_empty,host=a usage=1 60000000000",
+      "cq_empty,host=a usage=3 61000000000",
+      "cq_empty,host=b usage=5 62000000000"), "cq_empty")
+    def target(e: graft.Engine) = e.execute("SELECT * FROM cq_empty_1m").collect()
+      .map(r => (r.getAs[Long]("time"), r.getAs[String]("host"), r.getAs[Double]("mean"))).toSet
+    val expect = Set((60000000L, "a", 2.0), (60000000L, "b", 5.0))
+    assert(target(e) == expect)
+    assert(target(new graft.Engine(spark, sfDir, Some(dataDir))) == expect) // durable
+  }
+
   test("batch backfill produces the same answer as the streaming plan") {
     val s = spark
     import s.implicits._
